@@ -21,7 +21,15 @@ object Verify {
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       names: Seq[String]): Unit = {
     new java.io.File(outDir).mkdirs()
+    def delete(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(delete))
+      f.delete()
+    }
     names.foreach { name =>
+      // a query that throws while its DataFrame is built (library ops run
+      // jobs then) never starts the write: drop the last run's dump first
+      // so the oracle check sees it missing instead of passing it
+      delete(new java.io.File(s"$outDir/$name"))
       try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -51,25 +51,18 @@ object Dedup {
     * distance grows ~4x per round and the loop converges in
     * ~ceil(log4(diameter)) + 1 driver-synchronous rounds.
     *
-    * The iteration runs as a co-partitioned RDD loop, not a Catalyst
-    * plan-per-round: node ids are dictionary-encoded to dense longs once
-    * (in natural id order, so min-code ≡ min-id and decoded labels are
-    * bit-identical to a DataFrame min), and edges + labels share one
-    * HashPartitioner for the whole loop. Every per-round join is then a
-    * narrow co-partitioned zip — the only shuffles are the (combined)
-    * message reduction and the two pointer-jump relabelings, all moving
-    * compact (long, long) pairs instead of full Tungsten rows, and no
-    * per-round planning/AQE work happens at all. (The previous
-    * DataFrame-loop formulation re-planned and re-shuffled the full label
-    * relation 4-5x per round: 137 s / 3.2 GB shuffle on the 1M-chain
-    * bench; this loop is the same algorithm minus that overhead.)
+    * The rounds run on [[GraphLoop]], not as a Catalyst plan per round:
+    * node ids are dictionary-encoded to dense longs once (in natural id
+    * order, so min-code ≡ min-id and decoded labels are bit-identical to a
+    * DataFrame min), and the engine runs the round in one task for a small
+    * duplicate subgraph or as co-partitioned long-pair RDDs otherwise.
     *
-    * The driver issues exactly ONE job per round (convergence detection
-    * rides the round's materialization via an accumulator — no separate
-    * count). Pass `checkpointDir` (an HDFS/S3 path on a real cluster) for
-    * reliable per-round lineage truncation that survives executor loss;
-    * without one each round's labels persist MEMORY_AND_DISK and the loop
-    * releases the previous round's blocks explicitly.
+    * The driver issues ONE job per round on the distributed backend and
+    * one job in total in-task, each labelled `cc-round`. Pass
+    * `checkpointDir` (an HDFS/S3 path on a real cluster) for reliable
+    * per-round lineage truncation that survives executor loss; without one
+    * each round's labels persist MEMORY_AND_DISK and the loop releases the
+    * previous round's blocks explicitly.
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       idCol: String, maxIters: Int = 20,
@@ -87,11 +80,9 @@ object Dedup {
   def connectedComponentsWithStats(nodes: DataFrame, pairs: DataFrame,
       idCol: String, maxIters: Int = 20,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import org.apache.spark.storage.StorageLevel
 
     val spark = nodes.sparkSession
     // reliable (HDFS/S3) checkpointing survives executor loss mid-loop;
@@ -120,34 +111,22 @@ object Dedup {
     // Dictionary-encode paired node ids to dense longs IN NATURAL ID ORDER:
     // code order mirrors id order, so the min-code fixpoint decodes to
     // exactly the min-id labels the callers' oracles expect, for any
-    // orderable id type (longs, md5 strings, ...).
-    //
-    // one partitioner for the WHOLE loop: edges and every round's labels
-    // stay co-partitioned, so the per-round joins below are narrow.
-    // Size it to the duplicate SUBGRAPH, not the session default: every
-    // round is several driver-synchronous shuffle stages, and a corpus
-    // whose dup subgraph is a few hundred nodes pays pure per-stage
-    // scheduling latency on partitions that hold a handful of rows
-    // (50k labels/partition keeps tasks meaningful; the count is a
-    // cached-scan job that also materializes the paired cache — and the
-    // whole upstream pair plan — exactly once).
+    // orderable id type (longs, md5 strings, ...). The count sizes the loop
+    // partitioner to the duplicate SUBGRAPH; it is a cached-scan job that
+    // also materializes the paired cache — and the whole upstream pair
+    // plan — exactly once.
     val idField = StructField("id", nodeIds.schema.head.dataType, nodeIds.schema.head.nullable)
-    val nPaired = paired.count()
-    val part = new HashPartitioner(math.max(1,
-      math.min(spark.sessionState.conf.numShufflePartitions,
-        math.ceil(nPaired / 50000.0).toInt)))
+    val part = GraphLoop.partitioner(spark, paired.count())
 
     // The dict has two representations by subgraph size:
     //  - P == 1 (≤ 50k paired ids by partitioner construction): the
     //    ordered ids COLLECT to the driver once; codes are array indices,
     //    the encode map broadcasts, and decode is an array lookup — no
     //    sort exchange, no zipWithIndex pre-job, no dict cache, and no
-    //    encode/decode joins (4 fixture-scale stages per CC call gone).
-    //    The ordering comes from the same Spark orderBy, so code order
-    //    (hence every min-code fixpoint) is identical to the
-    //    distributed dict's.
-    //  - P > 1: the audited distributed dict (sort + zipWithIndex),
-    //    unchanged.
+    //    encode/decode joins. The ordering comes from the same Spark
+    //    orderBy, so code order (hence every min-code fixpoint) is
+    //    identical to the distributed dict's.
+    //  - P > 1: the distributed dict (sort + zipWithIndex).
     // the driver-side dict keys a java.util.HashMap on raw row values:
     // BinaryType ids surface as Array[Byte], which hashes/compares by
     // REFERENCE — every lookup would miss and NPE. Ids containing binary
@@ -171,212 +150,41 @@ object Dedup {
           .map { case (r, code) => Row(r.get(0), code) },
         StructType(Seq(idField, StructField("code", LongType, nullable = false)))))
 
-    val edgesR: RDD[(Long, Long)] =
-      (if (localIds != null) {
+    // edges keyed by source b: b's label flows to a (endpoints ⊆ paired by
+    // the semi-joins above, so the dict lookups always hit)
+    val (codes, edgesR): (RDD[(Long, Unit)], RDD[(Long, (Long, Long))]) =
+      if (localIds != null) {
         val codeOf = new java.util.HashMap[Any, java.lang.Long](localIds.length * 2)
         localIds.zipWithIndex.foreach { case (v, i) => codeOf.put(v, i.toLong) }
         val bc = spark.sparkContext.broadcast(codeOf)
-        // keyed by source b: b's label flows to a (endpoints ⊆ paired by
-        // the semi-joins above, so the map lookups always hit)
-        edgesDf.rdd.map(r => (bc.value.get(r.get(1)).longValue,
-          bc.value.get(r.get(0)).longValue))
-      } else edgesDf
-        .join(dict.select(col("id").as("a"), col("code").as("ca")), Seq("a"))
-        .join(dict.select(col("id").as("b"), col("code").as("cb")), Seq("b"))
-        .select(col("cb"), col("ca")).rdd // keyed by source b
-        .map(r => (r.getLong(0), r.getLong(1))))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+        (spark.sparkContext.parallelize(0L until localIds.length.toLong, 1).map(c => (c, ())),
+          edgesDf.rdd.map(r => (bc.value.get(r.get(1)).longValue,
+            (bc.value.get(r.get(0)).longValue, 1L))))
+      } else
+        (dict.select("code").rdd.map(r => (r.getLong(0), ())),
+          edgesDf
+            .join(dict.select(col("id").as("a"), col("code").as("ca")), Seq("a"))
+            .join(dict.select(col("id").as("b"), col("code").as("cb")), Seq("b"))
+            .select(col("cb"), col("ca")).rdd
+            .map(r => (r.getLong(0), (r.getLong(1), 1L))))
 
-    // _SER levels everywhere in the loop: a deserialized cache holds two
-    // boxed Longs + a Tuple2 per row (~48 heap bytes each, all promoted to
-    // old gen because rounds outlive young collections) and re-persists a
-    // fresh object graph per round; the serialized form is ~10 bytes/row
-    // of Kryo varints in a handful of byte arrays — GC-invisible.
-    var labels: RDD[(Long, Long)] =
-      (if (localIds != null)
-        spark.sparkContext.parallelize(0L until localIds.length.toLong, 1)
-          .map(c => (c, c))
-      else dict.select("code").rdd
-        .map(r => (r.getLong(0), r.getLong(0))))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-
-    val minL: (Long, Long) => Long = math.min
-    val chgAcc  = spark.sparkContext.longAccumulator("ccChanged")
-    var changed = 1L
-    var iter    = 0
-    // defensive edge-count gate on the partition-local loop: the
-    // partitioner is sized by NODES (<= 50k at P == 1), but a
-    // pathologically dense subgraph could still hold O(n²) edges — past
-    // this bound the distributed loop below runs instead (same recurrence,
-    // same fixpoint), so the one-task heap exposure is explicit, not
-    // implied by the node sizing. Overridable for tests (prop) and ops (env).
-    val maxLocalEdges = sys.props.get("graft.cc.maxLocalEdges")
-      .orElse(sys.env.get("GRAFT_CC_MAX_LOCAL_EDGES"))
-      .flatMap(_.toLongOption).getOrElse(5000000L)
-    val localLoop = part.numPartitions == 1 &&
-      edgesDf.count() <= maxLocalEdges
-    if (localLoop) {
-      // SMALL-SUBGRAPH FAST PATH: the partitioner is sized to the dup
-      // subgraph, so P == 1 means the whole label loop fits one
-      // partition — where each distributed round paid ~5 one-task
-      // shuffle stages of pure scheduler latency (measured ~350 ms/round
-      // at fixture scale). The identical recurrence (min-message fold,
-      // then TWO pointer jumps per round, convergence when no label
-      // improves) runs partition-locally over primitive-long maps in ONE
-      // narrow job: same per-round label states, hence the same round
-      // count and the same fixpoint — DedupSpec's long-chain round pin
-      // and the CC oracles verify both. P > 1 takes the distributed loop
-      // below, character-identical to the audited r8-r14 shape.
-      // MAX-semantics accumulators: the loop's (rounds, unconverged) are
-      // deterministic per partition, so a retried or speculative task
-      // re-reports the SAME value and max keeps it — a plain add would
-      // double-count and inflate the spec-pinned round observable
-      val roundsAcc = new MaxAccumulator
-      val leftAcc   = new MaxAccumulator
-      spark.sparkContext.register(roundsAcc, "ccLocalRounds")
-      spark.sparkContext.register(leftAcc, "ccLocalUnconverged")
-      val maxItersL = maxIters
-      val res = labels.zipPartitions(edgesR, preservesPartitioning = true) { (itL, itE) =>
-        var lab = new scala.collection.mutable.LongMap[Long]()
-        itL.foreach { case (i, c) => lab.update(i, c) }
-        val edgeArr = itE.toArray // (b, a): b's label flows to a
-        def jumpL(cur: scala.collection.mutable.LongMap[Long])
-            : scala.collection.mutable.LongMap[Long] = {
-          val out = new scala.collection.mutable.LongMap[Long](cur.size)
-          cur.foreach { case (i, c) => out.update(i, math.min(c, cur.getOrElse(c, c))) }
-          out
+    import GraphLoop.Min
+    val res = GraphLoop.run(spark, codes, edgesR, part, "cc-round",
+        checkpointDir.isDefined)(new GraphLoop.Program[Unit, Long] {
+      def apply(o: GraphLoop.Ops[Unit]): o.N[Long] =
+        o.converge(o.map(o.nodes)((id, _) => id), maxIters) { lab =>
+          // min over own label and every neighbor's (one edge hop), then
+          // two pointer jumps: path compression makes convergence
+          // logarithmic in component diameter, and the second jump per
+          // round halves the driver-synchronous rounds again
+          val prop = o.update(lab, o.send(o.edges, lab, Min)((c, _) => c), Min) {
+            (c, m, _) => math.min(c, m) }
+          o.jump(o.jump(prop))
         }
-        var chg = 1L
-        var rounds = 0
-        while (chg > 0 && rounds < maxItersL) {
-          val prop = new scala.collection.mutable.LongMap[Long](lab.size)
-          lab.foreach { case (i, c) => prop.update(i, c) }
-          edgeArr.foreach { case (b, a) =>
-            val c = lab(b)
-            if (c < prop(a)) prop.update(a, c)
-          }
-          val next = jumpL(jumpL(prop))
-          chg = 0L
-          next.foreach { case (i, nc) => if (nc < lab(i)) chg += 1 }
-          lab = next
-          rounds += 1
-        }
-        roundsAcc.add(rounds)
-        if (chg > 0) leftAcc.add(chg)
-        lab.iterator
-      }.persist(StorageLevel.MEMORY_AND_DISK_SER)
-      // reliable-checkpoint contract (lineage truncation that survives
-      // executor loss) holds on this path too: the converged labels are
-      // checkpointed once (persist-before-checkpoint, same as the
-      // distributed loop, so the writer's second pass reads the cache)
-      if (checkpointDir.isDefined) res.checkpoint()
-      graft.Profiler.attributed(spark, "cc-round") { res.count() }
-      labels.unpersist(blocking = true)
-      labels = res
-      iter = roundsAcc.value.toInt
-      changed = leftAcc.value
-    } else while (changed > 0 && iter < maxIters) {
-      val t0 = System.nanoTime()
-      import scala.collection.mutable.LongMap
-      // Per-round relational joins run as zipPartitions over primitive
-      // LongMaps instead of RDD join/leftOuterJoin (r16, guide §1.2 step 2
-      // + §5): every operand pair is co-partitioned on `part` and the
-      // lookup side has unique keys, so a cogroup-based join only added
-      // CompactBuffer + boxed-Option allocation per row — the LongMap
-      // lookups produce the identical (node, label) values with none of
-      // it. Shuffle count and bytes per round are unchanged (the message
-      // reduction and the two jump re-keyings); only the narrow per-task
-      // work got cheaper.
-      def lookupOf(it: Iterator[(Long, Long)]): LongMap[Long] = {
-        val m = new LongMap[Long]()
-        it.foreach { case (k, v) => m.update(k, v) }
-        m
-      }
-      // min over own label and all neighbors' labels: the edge-side label
-      // lookup is narrow (both sides on `part`; endpoints ⊆ paired ids by
-      // the semi-joins, so lab(b) always hits); the only shuffle is the
-      // map-side-combined message reduction
-      // (preservesPartitioning = false: the output re-keys from b to a, so
-      // the reduceByKey below must plant its real shuffle)
-      val msgs = edgesR.zipPartitions(labels, preservesPartitioning = false) {
-          (itE, itL) =>
-            val lab = lookupOf(itL)
-            itE.map { case (b, a) => (a, lab(b)) }
-        }
-        .reduceByKey(part, minL)
-      // labels holds every paired id; msgs keys are unique post-reduce —
-      // the left-outer min fold is a plain map lookup
-      val prop = labels.zipPartitions(msgs, preservesPartitioning = true) {
-        (itL, itM) =>
-          val m = lookupOf(itM)
-          itL.map { case (i, c) => (i, math.min(c, m.getOrElse(i, c))) }
-      }
-      // ...then pointer-jump (label <- label of label) twice: path
-      // compression makes convergence logarithmic in component diameter;
-      // two jumps per materialized round squares the compression again so
-      // the count of driver-synchronous rounds (the real cost) halves.
-      // Each jump shuffles only compact (long, long) pairs: once to key by
-      // cluster for the parent lookup (the lookup itself is narrow), once
-      // to bring the jumped labels back to their node's partition. Every
-      // label IS some node's code, so rel(c) always hits; rel has one
-      // record per node, so the jumped keys are already unique and the
-      // return re-keying is a plain partitionBy (the old reduceByKey's
-      // min fold never fired — map-side combine on unique keys built a
-      // per-partition hash map for nothing).
-      def jump(rel: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-        // NOTE preservesPartitioning = false on the lookup stage: its
-        // output re-keys from c to i, so the following partitionBy must
-        // see "unknown partitioner" and do the real shuffle back to i
-        val jumped = rel.map { case (i, c) => (c, i) }
-          .partitionBy(part)
-          .zipPartitions(rel, preservesPartitioning = false) { (itJ, itR) =>
-            val m = lookupOf(itR)
-            itJ.map { case (c, i) => (i, m(c)) }
-          }
-          .partitionBy(part)
-        rel.zipPartitions(jumped, preservesPartitioning = true) { (itR, itJ) =>
-          val m = lookupOf(itJ)
-          itR.map { case (i, c) => (i, math.min(c, m.getOrElse(i, c))) }
-        }
-      }
-      // Convergence detection rides the round's one materialization job:
-      // the old label zips in (narrow), a mapPartitions bumps an
-      // accumulator per improved row — no separate count() job runs. A
-      // resubmitted task can at worst over-count (never report 0 when
-      // labels moved), which only risks one extra cheap round.
-      chgAcc.reset()
-      val flagged = jump(jump(prop))
-        .zipPartitions(labels, preservesPartitioning = true) { (itN, itL) =>
-          val old = lookupOf(itL)
-          itN.map { case (i, nc) =>
-            if (nc < old(i)) chgAcc.add(1L)
-            (i, nc)
-          }
-        }
-      // one driver-synchronous job per round, labeled for Profiler's
-      // per-op breakdown (graft:cc-round vs the composed query's action).
-      // persist BEFORE checkpoint: the checkpoint writer's second pass
-      // then reads the cache instead of recomputing (which would also
-      // double-fire the convergence accumulator).
-      val next = graft.Profiler.attributed(spark, "cc-round") {
-        flagged.persist(StorageLevel.MEMORY_AND_DISK_SER)
-        if (checkpointDir.isDefined) flagged.checkpoint()
-        flagged.count()
-        flagged
-      }
-      changed = chgAcc.value
-      iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $iter ${(System.nanoTime() - t0) / 1e9}%.2fs changed=$changed")
-      labels.unpersist(blocking = true) // prior round's blocks
-      labels = next
-    }
-    edgesR.unpersist(blocking = false)
+    })
     // fail loudly rather than silently return non-converged labels (a
     // wrong keep-one-per-cluster decision would keep duplicates)
-    if (changed > 0)
+    if (res.unconverged > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIters rounds")
     // decode back to the caller's id type — an array lookup over the
@@ -384,18 +192,17 @@ object Dedup {
     // singletons rejoin with self-labels. The returned relation reads the
     // final round's blocks + the cached node relations — they live until
     // the caller's CacheScope.release().
-    CacheScope.registerRdd(labels)
     val decoded =
       if (localIds != null) {
         val bcIds = spark.sparkContext.broadcast(localIds)
         spark.createDataFrame(
-          labels.map { case (i, c) =>
+          res.values.map { case (i, c) =>
             Row(bcIds.value(i.toInt), bcIds.value(c.toInt)) },
           StructType(Seq(idField,
             StructField("cluster", idField.dataType, idField.nullable))))
       } else {
         val labDf = spark.createDataFrame(
-          labels.map { case (i, c) => Row(i, c) },
+          res.values.map { case (i, c) => Row(i, c) },
           StructType(Seq(StructField("code", LongType, nullable = false),
             StructField("ccode", LongType, nullable = false))))
         labDf
@@ -405,24 +212,7 @@ object Dedup {
       }
     val singletons = nodeIds.join(paired, Seq("id"), "left_anti")
       .withColumn("cluster", col("id"))
-    (decoded.unionByName(singletons), iter)
-  }
-
-  /** Long accumulator with MAX merge semantics: deterministic per-task
-    * values survive task retries/speculation un-inflated (see the CC
-    * local loop's round count).
-    */
-  private final class MaxAccumulator
-      extends org.apache.spark.util.AccumulatorV2[Long, Long] {
-    private var _v = 0L
-    override def isZero: Boolean = _v == 0L
-    override def copy(): MaxAccumulator = {
-      val c = new MaxAccumulator; c._v = _v; c }
-    override def reset(): Unit = _v = 0L
-    override def add(v: Long): Unit = if (v > _v) _v = v
-    override def merge(o: org.apache.spark.util.AccumulatorV2[Long, Long]): Unit =
-      if (o.value > _v) _v = o.value
-    override def value: Long = _v
+    (decoded.unionByName(singletons), res.rounds)
   }
 
   /** MinHash hash model: ONE strong hash per shingle, k cheap universal

@@ -10,6 +10,10 @@ class DedupSpec extends SparkSpec {
       nodes.toDF("doc_id"), pairs.toDF("a", "b"), "doc_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** `body` on the in-task backend, then forced onto the distributed one */
+  private def bothBackends[T](body: => T): (T, T) =
+    (body, graft.functions.GraphLoop.localEdgeLimit.withValue(0L)(body))
+
   test("duplicatedWindowStats counts cross-doc duplicated token windows (hand-computed)") {
     // n=3 windows:
     //   doc 0 "a b c d"   -> {a b c, b c d}
@@ -106,18 +110,24 @@ class DedupSpec extends SparkSpec {
     // log4(diameter) = 7 rounds (+1 confirming round) — far under the
     // ~16k a propagate-only loop would need, and within default maxIters.
     val n = 16384L
-    val (labels, rounds) = Dedup.connectedComponentsWithStats(
-      spark.range(0, n).toDF("id"),
-      spark.range(0, n - 1).select(
-        org.apache.spark.sql.functions.col("id").as("a"),
-        (org.apache.spark.sql.functions.col("id") + 1).as("b")),
-      "id")
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
-    CacheScope.release()
-    assert(got.length == n && got.forall(_._2 == 0L))
-    assert(rounds <= 10, s"expected ~log4($n)+1 rounds, got $rounds")
-    assert(rounds >= 6, s"a $n-node path cannot resolve in $rounds rounds " +
-      "— the round counter is broken")
+    val (local, dist) = bothBackends {
+      val (labels, rounds) = Dedup.connectedComponentsWithStats(
+        spark.range(0, n).toDF("id"),
+        spark.range(0, n - 1).select(
+          org.apache.spark.sql.functions.col("id").as("a"),
+          (org.apache.spark.sql.functions.col("id") + 1).as("b")),
+        "id")
+      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
+      CacheScope.release()
+      (got, rounds)
+    }
+    for ((got, rounds) <- Seq(local, dist)) {
+      assert(got.length == n && got.forall(_._2 == 0L))
+      assert(rounds <= 10, s"expected ~log4($n)+1 rounds, got $rounds")
+      assert(rounds >= 6, s"a $n-node path cannot resolve in $rounds rounds " +
+        "— the round counter is broken")
+    }
+    assert(local._2 == dist._2, "backends disagree on the round count")
   }
 
   test("connectedComponents labels exactly the given nodes; foreign edges drop") {
@@ -154,45 +164,47 @@ class DedupSpec extends SparkSpec {
   }
 
   test("edge-count gate: past maxLocalEdges the distributed loop runs — identical labels AND rounds") {
-    val key = "graft.cc.maxLocalEdges"
-    val prev = sys.props.get(key)
     val nodes = (0L until 60L).toDF("doc_id")
     val chain = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
-    def run(): (Map[Long, Long], Int) = {
+    val ((mLocal, rLocal), (mDist, rDist)) = bothBackends {
       val (df, rounds) = Dedup.connectedComponentsWithStats(nodes, chain, "doc_id")
       val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       CacheScope.release()
       (m, rounds)
     }
-    try {
-      val (mLocal, rLocal) = run() // default gate: P==1 local loop
-      sys.props(key) = "1"         // force the distributed loop at P==1
-      val (mDist, rDist) = run()
-      assert(mLocal == mDist, "gate changed the labels")
-      assert(rLocal == rDist, "gate changed the round count — the local " +
-        "loop no longer replays the distributed recurrence")
-      assert(mLocal.size == 60 && mLocal.values.forall(_ == 0L))
-    } finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    assert(mLocal == mDist, "gate changed the labels")
+    assert(rLocal == rDist, "gate changed the round count — the in-task " +
+      "loop no longer replays the distributed recurrence")
+    assert(mLocal.size == 60 && mLocal.values.forall(_ == 0L))
   }
 
   test("connectedComponents with a reliable checkpoint dir: same labels, checkpoint files written") {
-    // the cluster-safe mode VERDICT asked for: per-round lineage truncation
-    // goes through sc.checkpoint (survives executor loss), not local blocks
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toString
-    val got = Dedup.connectedComponents(
-      (0L until 30L).toDF("doc_id"),
-      (0L until 29L).map(i => (i, i + 1)).toDF("a", "b"),
-      "doc_id", checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == 30 && got.values.forall(_ == 0L))
+    // the cluster-safe mode: lineage truncation goes through sc.checkpoint
+    // (survives executor loss), not local blocks — once for the in-task
+    // result, once per round on the distributed backend
     def files(p: java.io.File): Iterator[java.io.File] =
       Option(p.listFiles).iterator.flatten.flatMap(f =>
         if (f.isDirectory) files(f) else Iterator.single(f))
-    assert(files(new java.io.File(dir)).nonEmpty,
-      "reliable checkpoint mode must actually write to the checkpoint dir")
+    val (local, dist) = bothBackends {
+      val dir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toString
+      val (df, rounds) = Dedup.connectedComponentsWithStats(
+        (0L until 30L).toDF("doc_id"),
+        (0L until 29L).map(i => (i, i + 1)).toDF("a", "b"),
+        "doc_id", checkpointDir = Some(dir))
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      CacheScope.release()
+      // one checkpointed RDD directory per materialization
+      val rddDirs = files(new java.io.File(dir)).map(_.getParentFile.getName).toSet
+      (got, rounds, rddDirs.size)
+    }
+    for ((got, _, nDirs) <- Seq(local, dist)) {
+      assert(got.size == 30 && got.values.forall(_ == 0L))
+      assert(nDirs > 0, "reliable checkpoint mode must actually write to the checkpoint dir")
+    }
+    assert(local._1 == dist._1 && local._2 == dist._2)
+    assert(local._3 == 1, s"in-task loop checkpoints its result once, wrote ${local._3}")
+    assert(dist._3 == dist._2, s"distributed loop checkpoints every round: " +
+      s"${dist._3} checkpoints for ${dist._2} rounds")
   }
 
   test("winnowPairs: a shared run of w+k-1 tokens guarantees a shared fingerprint") {

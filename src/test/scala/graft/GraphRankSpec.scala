@@ -48,32 +48,42 @@ class GraphRankSpec extends SparkSpec {
   }
 
   test("edge-count gate: forcing the distributed pageRank/HITS loops reproduces the local bits") {
-    // the P == 1 partition-local fast paths must replay the distributed
-    // recurrence exactly — force the distributed loops via the gate and
-    // compare bit-for-bit (this is also the P > 1 loop shape's only
-    // in-suite coverage, since test graphs always size to one partition)
-    val key = "graft.graph.maxLocalEdges"
-    val prev = sys.props.get(key)
+    // the in-task backend must replay the distributed recurrence exactly —
+    // force the distributed backend through the seam and compare
+    // bit-for-bit. This is also the distributed loop's in-suite coverage
+    // for the seeded-teleport and weighted-share paths, since test graphs
+    // always size to one partition.
+    // nodes 150..159 are dangling sinks: the dangling-mass scalar is live
     val edges = (0L until 150L).flatMap(i =>
-      Seq((i, (i * 7 + 1) % 150L), (i, (i * 13 + 5) % 150L)))
-    def hitsMap() = {
-      val m = GraphRank.hits(edges.toDF("src", "dst"), iters = 4)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      Seq((i, (i * 7 + 1) % 150L), (i, (i * 13 + 5) % 150L), (i, 150L + i % 10)))
+    val wEdges = edges.map { case (s, d) => (s, d, (s * 31 + d) % 5 + 1) }
+    val seeds = Seq(3L, 40L, 77L, 149L)
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def all() = {
+      val e = edges.toDF("src", "dst")
+      val we = wEdges.toDF("src", "dst", "w")
+      val sd = seeds.toDF("id")
+      val m = Map(
+        "pageRank" -> ranks(GraphRank.pageRank(e, iters = 4)),
+        "pageRankWeighted" -> ranks(GraphRank.pageRankWeighted(we, "w", iters = 4)),
+        "personalizedPageRank" -> ranks(GraphRank.personalizedPageRank(e, sd, iters = 4)),
+        "personalizedPageRankWeighted" ->
+          ranks(GraphRank.personalizedPageRankWeighted(we, "w", sd, iters = 4)),
+        "hits" -> GraphRank.hits(e, iters = 4).collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap)
       CacheScope.release()
       m
     }
-    def prMap() = { val m = run(edges, iters = 4); CacheScope.release(); m }
-    try {
-      val (prLocal, hLocal) = (prMap(), hitsMap())
-      sys.props(key) = "0" // every graph takes the distributed loop
-      val (prDist, hDist) = (prMap(), hitsMap())
-      assert(prLocal == prDist, "pageRank local/distributed paths diverged")
-      assert(hLocal == hDist, "hits local/distributed paths diverged")
-      assert(prLocal == refPageRank(edges, 4))
-    } finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    val local = all()
+    val dist = graft.functions.GraphLoop.localEdgeLimit.withValue(0L)(all())
+    for (k <- local.keys)
+      assert(local(k) == dist(k), s"$k: in-task/distributed backends diverged")
+    assert(local("pageRank") == refPageRank(edges, 4))
+    assert(local("pageRankWeighted") == refPageRankW(wEdges, 4))
+    assert(local("personalizedPageRank") == refPpr(edges, seeds.toSet, 4))
+    assert(local("personalizedPageRankWeighted") == refPprW(wEdges, seeds.toSet, 4))
+    assert(local("hits") == refHits(edges, 4))
   }
 
   test("pageRank semantics: hub with many in-links outranks leaf nodes; mass ~conserved") {

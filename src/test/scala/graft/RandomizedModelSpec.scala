@@ -191,7 +191,7 @@ class RandomizedModelSpec extends SparkSpec {
         // min id in the component = the union-find root under min-merge
         find(i.toInt).toLong
       })).sortBy(_._1)
-      val got = Dedup.connectedComponents(
+      def got = Dedup.connectedComponents(
         nodes.map(Tuple1(_)).toDF("doc_id"),
         if (edges.isEmpty) Seq((-1L, -2L)).toDF("a", "b") // foreign edge: drops
         else edges.toDF("a", "b"),
@@ -199,6 +199,10 @@ class RandomizedModelSpec extends SparkSpec {
         .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("cluster")))
         .sortBy(_._1).toSeq
       assert(got == expect, s"iteration $it n=$n edges=${edges.size}")
+      // the same model on the distributed backend
+      graft.functions.GraphLoop.localEdgeLimit.withValue(0L) {
+        assert(got == expect, s"distributed: iteration $it n=$n edges=${edges.size}")
+      }
     }
   }
 

@@ -125,6 +125,25 @@ class SimilaritySpec extends SparkSpec {
     assert(ns == Map(0L -> 5L, 1L -> 5L))
   }
 
+  test("VecMeanAgg fails loudly past the exact-mean envelope (|x| > ~9.2e10)") {
+    def d(x: Double) = java.lang.Double.valueOf(x)
+    val agg = new Similarity.VecMeanAgg
+    // ±9.2e10 at scale 8 is ±9.2e18 unscaled: still inside a signed long
+    agg.reduce(agg.zero, Seq(d(9.2e10), d(-9.2e10)))
+    for (x <- Seq(9.3e10, -9.3e10, 1e15)) {
+      val e = intercept[IllegalStateException](agg.reduce(agg.zero, Seq(d(1.0), d(x))))
+      assert(e.getMessage == s"vector element $x exceeds the exact-mean envelope (|x| <= ~9.2e10)")
+    }
+    // through the DataFrame aggregate the same error fails the query
+    val e = intercept[Exception] {
+      Seq(Seq(d(1.0), d(2.0)), Seq(d(1.0), d(1e11))).toDF("v")
+        .agg(Similarity.vecMeanUdaf(col("v"))).collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage.contains("exceeds the exact-mean envelope")), e.toString)
+  }
+
   test("kmeansCentroids: a cluster that empties mid-training is carried forward, never dropped") {
     // ids 0,1,2 share one vector -> init seeds three IDENTICAL centroids;
     // every point ties across all three and the tie-break sends ALL of

@@ -19,6 +19,11 @@ def main(sf_dir, out_dir):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_noracle = 0
+    # a query with an oracle but no dump failed before it could write
+    dumped = {d.rstrip("/").split("/")[-1] for d in glob.glob(f"{out_dir}/*/")}
+    for name in sorted(set(oracle) - dumped):
+        print(f"FAIL {name}: no dump (the query failed)")
+        n_fail += 1
     for qdir in sorted(glob.glob(f"{out_dir}/*/")):
         name = qdir.rstrip("/").split("/")[-1]
         got = con.sql(f"SELECT * FROM '{qdir}/*.parquet'").df()
